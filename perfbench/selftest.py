@@ -34,6 +34,7 @@ def main() -> int:
     sys.path.insert(0, ROOT)
     from perfbench import checks
     from perfbench.harness import Context
+    from perfbench.run import _stop_gateway
     from tmframe_spark.codec.udfs import pack_rollup_blocks
     from tmframe_spark.data.transcripts import synth_transcripts
     from tmframe_spark.ops.checkpoint import checkpointed_rollup_run
@@ -79,6 +80,7 @@ def main() -> int:
         results["missing manifest: manifests"] = bool(checks.check_manifests(man, expected))
     finally:
         ctx.close()
+        _stop_gateway()
     for name, ok in results.items():
         print(f"{'ok  ' if ok else 'FAIL'} {name}")
     print(json.dumps({"selftest_passed": all(results.values()), "cases": results}))
