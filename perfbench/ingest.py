@@ -1,19 +1,23 @@
 """ingest_maintain: the daily ingest, backfill, archiver and retention loop.
 
-Set-up cuts the seeded input into calendar days and holds back a seeded
-share of each day's rows to land ``late_days`` later. Each op first lands
-the next day's on-time rows (and the rows held back from ``late_days``
-ago) in the batch input directory and in the archiver's landing
-directory: a copy of a few MB of parquet, inside the op's wall but
+Set-up cuts the seeded input into three calendar days and holds back a
+seeded share of each day's rows to land one day later. The warm-up lands
+days 0 and 1 and day 0's late rows, commits them while the archiver drains
+them, reads and vacuums once, and snapshots the state: batch input,
+landing directory, archive, manifests and the archiver's checkpoint and
+table. Every op starts from that snapshot (restored before the op's timed
+window), so every op is the same day step. It first lands day 2's on-time
+rows and day 1's late rows in the batch input and in the archiver's
+landing directory: a copy of a few MB of parquet, inside the op's wall but
 outside its step timings. Then it runs one day step of the rollup
 (``--backfill``), archiver and maintenance jobs:
 
-1. ``checkpointed_rollup_run`` commits the new day;
-2. ``backfill_run`` re-rolls the day whose input grew;
+1. ``checkpointed_rollup_run`` commits day 2;
+2. ``backfill_run`` re-rolls day 1, whose input grew;
 3. ``materialize_continuous_blocks`` (availableNow) drains what landed;
-4. one read-after-write ``serve_range`` over the new day, through
+4. one read-after-write ``serve_range`` over day 2, through
    ``Catalog.read``;
-5. ``vacuum_expired_days`` on the 1m tier.
+5. ``vacuum_expired_days`` on the 1m tier, which drops day 0.
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from datetime import date
 
 import pyarrow.parquet as pq
@@ -50,7 +55,8 @@ TABLE = "rollup_1m_blocks"
 STREAM_TABLE = "blocks_1m_stream"
 DAY_NS = 86_400_000_000_000
 TURNS_PER_DAY = 34_560  # the generator's 2.5 s mean cadence
-WARM_STEPS = 2
+#: what the snapshot holds, by attribute name
+STATE = ("input", "landing", "archive", "manifests", "stream_root")
 
 
 class IngestMaintain:
@@ -59,12 +65,11 @@ class IngestMaintain:
     def __init__(self, ctx):
         self.ctx = ctx
         self.params = {
-            "n_days": 5,
-            "n_turns": 5 * TURNS_PER_DAY,
+            "n_days": 3,
+            "n_turns": 3 * TURNS_PER_DAY,
             "n_convs": 1_000,
             "hot_conv_pct": 10,
             "late_pct": 5,
-            "late_days": 1,
             "retention_days_1m": 1,
         }
         self.source = ctx.path("source")
@@ -73,7 +78,6 @@ class IngestMaintain:
         self.archive = ctx.path("archive")
         self.manifests = ctx.path("manifests")
         self.stream_root = ctx.path("stream")
-        self.step = 0
         self.landed: dict[str, int] = {}  # rows landed so far per day
         self.expected: dict[str, int] = {}  # input_rows each manifest must hold
 
@@ -101,10 +105,6 @@ class IngestMaintain:
             os.makedirs(d)
         return {"data.gen_s": time.perf_counter() - t0}
 
-    @property
-    def remaining_ops(self) -> int:
-        return len(self.days) - self.step
-
     def _land(self, day: str, late: bool) -> None:
         files = sorted(glob.glob(os.path.join(self.source, f"day={day}", f"late={str(late).lower()}", "*.parquet")))
         for k, f in enumerate(files):
@@ -114,18 +114,37 @@ class IngestMaintain:
         self.landed[day] = self.landed.get(day, 0) + self.counts.get((day, late), 0)
 
     def warmup(self) -> None:
-        for _ in range(WARM_STEPS):
-            self.op(-1)
+        d0, d1 = self.days[0], self.days[1]
+        self._land(d0, False)
+        self._land(d1, False)
+        self._land(d0, True)
+        # the archiver drains on a second thread while the rollup job
+        # commits both days: the two jobs run side by side in production,
+        # and their cold starts overlap
+        with ThreadPoolExecutor(1) as pool:
+            drained = pool.submit(self._drain)
+            t = self.ctx.spark.read.parquet(self.input)
+            self._committed(checkpointed_rollup_run(t, self.archive, self.manifests, table=TABLE))
+            drained.result()
+        self._read(d1)
+        self._vacuum(d1)
+        snap = self.ctx.path("snapshot")
+        for attr in STATE:
+            shutil.copytree(getattr(self, attr), os.path.join(snap, attr))
+        self.snapshot = (snap, dict(self.landed), dict(self.expected))
+
+    def prepare(self, i: int) -> None:
+        """Restore the post-warm-up state, outside the op's timed window."""
+        snap, landed, expected = self.snapshot
+        for attr in STATE:
+            shutil.rmtree(getattr(self, attr))
+            shutil.copytree(os.path.join(snap, attr), getattr(self, attr))
+        self.landed, self.expected = dict(landed), dict(expected)
 
     def op(self, i: int) -> dict:
-        k = self.step
-        self.step += 1
-        day = self.days[k]
+        day, back = self.days[2], self.days[1]
         self._land(day, False)
-        back = self.days[k - self.params["late_days"]] if k >= self.params["late_days"] else None
-        if back is not None:
-            self._land(back, True)
-
+        self._land(back, True)
         tr, spark = self.ctx.tracer, self.ctx.spark
         t_start = time.perf_counter()
         t = spark.read.parquet(self.input)
@@ -135,31 +154,13 @@ class IngestMaintain:
         with tr.span("ops.checkpoint.backfill_run"):
             backfilled = backfill_run(t, self.archive, self.manifests, table=TABLE)
         t_backfill = time.perf_counter()
-        with tr.span("streaming.materialize_continuous_blocks"):
-            q = materialize_continuous_blocks(
-                spark, self.landing, self.schema, self.stream_root, tier="1m", table=STREAM_TABLE
-            )
-            q.awaitTermination()
-            late = record_late_drops(q, self.stream_root, STREAM_TABLE)
-            progress = [json.loads(x.json) for x in q.recentProgress]
+        late, progress = self._drain()
         t_drain = time.perf_counter()
-        lo = (date.fromisoformat(day) - date(1970, 1, 1)).days * DAY_NS
-        with tr.span("data.catalog.read"):
-            blocks = Catalog(spark, self.archive).read(TABLE)
-        with tr.span("ops.serve.serve_range"):
-            pts = serve_range(blocks, ["conv_id", "day"], lo, lo + DAY_NS - 1)
-        with tr.span("action.read_after_write"):
-            read_turns = int(pts.agg(F.sum("v1")).collect()[0][0] or 0)
+        read_turns = self._read(day)
         t_read = time.perf_counter()
-        with tr.span("ops.retention.vacuum_expired_days"):
-            dropped = vacuum_expired_days(
-                Catalog(spark, self.archive), TABLE, "1m", day, policy={"1m": self.params["retention_days_1m"]}
-            )
+        dropped = self._vacuum(day)
         t_end = time.perf_counter()
-
-        for m in committed + backfilled:
-            d = m.partition.split("=", 1)[1]
-            self.expected[d] = self.landed[d]
+        self._committed(committed + backfilled)
         rec = {
             "day": day,
             "backfill_day": back,
@@ -178,18 +179,48 @@ class IngestMaintain:
             "trigger_ms": sum(x.get("durationMs", {}).get("triggerExecution", 0) for x in progress),
             "late_dropped": sum(late.values()),
         }
-        if back is not None:
-            # the backfilled day is complete: its archive bytes per turn
-            nbytes = sum(os.path.getsize(f) for f in glob.glob(os.path.join(self.archive, TABLE, f"day={back}", "*.parquet")))
-            rec["backfill_bytes_per_turn"] = nbytes / self.landed[back]
+        # the backfilled day is complete: its archive bytes per turn
+        nbytes = sum(os.path.getsize(f) for f in glob.glob(os.path.join(self.archive, TABLE, f"day={back}", "*.parquet")))
+        rec["backfill_bytes_per_turn"] = nbytes / self.landed[back]
         return rec
+
+    def _committed(self, manifests) -> None:
+        for m in manifests:
+            d = m.partition.split("=", 1)[1]
+            self.expected[d] = self.landed[d]
+
+    def _drain(self) -> tuple[dict, list]:
+        """The archiver: drain what landed; (late rows dropped, progress)."""
+        with self.ctx.tracer.span("streaming.materialize_continuous_blocks"):
+            q = materialize_continuous_blocks(
+                self.ctx.spark, self.landing, self.schema, self.stream_root, tier="1m", table=STREAM_TABLE
+            )
+            q.awaitTermination()
+            late = record_late_drops(q, self.stream_root, STREAM_TABLE)
+            return late, [json.loads(x.json) for x in q.recentProgress]
+
+    def _read(self, day: str) -> int:
+        """Read-after-write: sum(turns) served over ``day``."""
+        tr = self.ctx.tracer
+        lo = (date.fromisoformat(day) - date(1970, 1, 1)).days * DAY_NS
+        with tr.span("data.catalog.read"):
+            blocks = Catalog(self.ctx.spark, self.archive).read(TABLE)
+        with tr.span("ops.serve.serve_range"):
+            pts = serve_range(blocks, ["conv_id", "day"], lo, lo + DAY_NS - 1)
+        with tr.span("action.read_after_write"):
+            return int(pts.agg(F.sum("v1")).collect()[0][0] or 0)
+
+    def _vacuum(self, day: str) -> list:
+        with self.ctx.tracer.span("ops.retention.vacuum_expired_days"):
+            return vacuum_expired_days(
+                Catalog(self.ctx.spark, self.archive), TABLE, "1m", day,
+                policy={"1m": self.params["retention_days_1m"]},
+            )
 
     def check(self, records: list[dict]) -> tuple[set, list]:
         bad, msgs = set(), []
         for r in records:
-            if [f"day={r['day']}"] != r["committed"] or (
-                r["backfill_day"] and [f"day={r['backfill_day']}"] != r["backfilled"]
-            ):
+            if [f"day={r['day']}"] != r["committed"] or [f"day={r['backfill_day']}"] != r["backfilled"]:
                 bad.add(r["op"])
                 msgs.append(f"op {r['op']}: committed {r['committed']}, backfilled {r['backfilled']}")
             if r["read_turns"] != r["day_turns"]:
@@ -216,13 +247,12 @@ class IngestMaintain:
 
     def metrics(self, records: list[dict]) -> dict:
         rs = [r for r in records if not r["traced"]]
-        first = next((r for r in records if "backfill_bytes_per_turn" in r), None)
         return {
             "ingest_day_p50_s": (median([r["commit_s"] for r in rs]), "s"),
-            "backfill_day_p50_s": (median([r["backfill_s"] for r in rs if r["backfilled"]]), "s"),
+            "backfill_day_p50_s": (median([r["backfill_s"] for r in rs]), "s"),
             "stream_drain_p50_s": (median([r["drain_s"] for r in rs]), "s"),
             "read_after_write_p50_ms": (median([r["read_ms"] for r in rs]), "ms"),
-            "archive_bytes_per_turn": (first["backfill_bytes_per_turn"] if first else float("nan"), "bytes"),
+            "archive_bytes_per_turn": (median([r["backfill_bytes_per_turn"] for r in records]), "bytes"),
         }
 
     def layer_metrics(self, records: list[dict]) -> dict:
@@ -237,7 +267,8 @@ class IngestMaintain:
 
     def trace_probe(self, rec: dict, layers: dict) -> dict:
         """After the traced op: the two all-input scans the jobs start with,
-        one manifest commit, and the catalog writes seen in the plans."""
+        one manifest commit, the archive's bytes per point, and the catalog
+        writes seen in the plans."""
         spans = self.ctx.tracer.last_op_spans
         t = self.ctx.spark.read.parquet(self.input)
         t0 = time.perf_counter()
@@ -249,9 +280,13 @@ class IngestMaintain:
         write_manifest(probe_root, PartitionManifest("day=probe", 0, 0, 0, 0.0, 0.0, "probe", {}))
         t3 = time.perf_counter()
         shutil.rmtree(probe_root, ignore_errors=True)
+        st = Catalog(self.ctx.spark, self.archive).read(TABLE).agg(
+            F.sum(F.length("frame")).alias("nbytes"), F.sum("n_points").alias("pts")
+        ).collect()[0]
         ck = [spans.get(n, {}) for n in ("ops.checkpoint.checkpointed_rollup_run", "ops.checkpoint.backfill_run")]
         days = len(rec.get("committed", ())) + len(rec.get("backfilled", ())) or 1
         return {
+            "codec.bytes_per_point": int(st["nbytes"]) / int(st["pts"]),
             "ops.checkpoint.pending_days_s": t1 - t0,
             "ops.checkpoint.stale_days_s": t2 - t1,
             "ops.checkpoint.manifest_ms": (t3 - t2) * 1e3,

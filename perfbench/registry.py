@@ -1,8 +1,10 @@
-"""registry_sweep: the twelve non-flagship registry queries of the frozen
-bench.py leaf set, each run with ``.count()``, over seeded stand-in tables.
+"""The registry queries that archive_query runs, and their oracle.
 
-One op is one sweep of the twelve queries. Set-up writes the tables
-(``regdata.py``) and the warm-up runs one sweep.
+Four queries of the frozen bench.py leaf set, one for each registry layer
+that no other workload and no serving request reaches. Each runs with
+``.count()`` over the seeded stand-in tables of ``regdata.py``; its oracle
+is the row count of the query's DuckDB SQL
+(``oracle_sql()``/``pytest_only_oracles()``) over the same tables.
 """
 
 from __future__ import annotations
@@ -11,98 +13,42 @@ import glob
 import os
 import time
 
-from perfbench.harness import median
-from perfbench.regdata import write_tables
 from tmframe_spark import queries as Q
 
-#: query -> the layer it exercises (span names)
+#: query -> the layer it exercises (span names). ops.asof, the fifth
+#: registry layer, is reached through serve_asof.
 QUERIES = {
-    "asof_last_at_or_before": "ops.asof",
     "hash_dedup": "ops.dedup",
     "merge_rank": "ops.merge",
-    "tfgroup_minute_counts": "ops.rollup",
-    "minhash_lsh_pairs": "text",
     "simhash": "text",
     "ann_topk": "vec",
-    "token_stats_by_lang": "text",
-    "sessionize": "data",
-    "count_window_dedup": "ops.dedup",
-    "msgpack_decode": "codec",
-    "range_serving": "ops.serve",
 }
 
 
-class RegistrySweep:
-    name = "registry_sweep"
-
-    def __init__(self, ctx):
-        self.ctx = ctx
-        self.params = {"n_events": 100_000, "n_users": 1_500, "n_docs": 5_000, "n_vecs": 2_000}
-        self.sf_dir = ctx.path("tables")
-        self.reg = Q.queries()
-
-    def setup(self) -> dict:
+def run_queries(tr, spark, sf_dir: str) -> tuple[dict, dict]:
+    """Run every query once; returns (latency_s, row count) by query."""
+    reg = Q.queries()
+    lat, counts = {}, {}
+    for name, layer in QUERIES.items():
         t0 = time.perf_counter()
-        self.rows = write_tables(self.sf_dir, self.ctx.seed, **self.params)
-        return {"data.gen_s": time.perf_counter() - t0}
+        with tr.span(f"registry.{layer}.{name}"):
+            counts[name] = reg[name](spark, sf_dir).count()
+        lat[name] = time.perf_counter() - t0
+    return lat, counts
 
-    def warmup(self) -> None:
-        self.warm = self.op(-1)
 
-    def op(self, i: int) -> dict:
-        tr, spark = self.ctx.tracer, self.ctx.spark
-        lat, counts = {}, {}
-        for name, layer in QUERIES.items():
-            t0 = time.perf_counter()
-            with tr.span(f"registry.{layer}.{name}"):
-                counts[name] = self.reg[name](spark, self.sf_dir).count()
-            lat[name] = time.perf_counter() - t0
-        return {"latency_s": lat, "counts": counts}
+def oracle_counts(sf_dir: str) -> dict:
+    """Row count of each query's DuckDB oracle over the tables in ``sf_dir``."""
+    import duckdb
 
-    def _oracle_counts(self) -> dict:
-        """Row counts of the DuckDB oracles over the same tables."""
-        import duckdb
-
-        sql = {**Q.oracle_sql(), **Q.pytest_only_oracles()}
-        con = duckdb.connect()
-        try:
-            con.execute("SET TimeZone = 'UTC'")
-            for p in glob.glob(os.path.join(self.sf_dir, "*.parquet")):
-                name = os.path.basename(p).removesuffix(".parquet")
-                con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
-            return {
-                n: con.execute(f"SELECT count(*) FROM ({sql[n].strip().rstrip(';')})").fetchone()[0]
-                for n in QUERIES
-                if n in sql
-            }
-        finally:
-            con.close()
-
-    def check(self, records: list[dict]) -> tuple[set, list]:
-        bad, msgs = set(), []
-        oracle = self._oracle_counts()
-        for r in [dict(self.warm, op=-1)] + records:
-            for n, c in r["counts"].items():
-                want = oracle.get(n, self.warm["counts"][n])
-                if c != want:
-                    bad.add(r["op"])
-                    msgs.append(f"op {r['op']} {n}: {c} rows, want {want}")
-                if c == 0:
-                    bad.add(r["op"])
-                    msgs.append(f"op {r['op']} {n}: no rows")
-        bad.discard(-1)
-        return bad, msgs
-
-    def _medians(self, records) -> dict:
-        rs = [r for r in records if not r["traced"]] or records
-        return {n: median([r["latency_s"][n] for r in rs]) for n in QUERIES}
-
-    def metrics(self, records: list[dict]) -> dict:
-        return {"registry_sweep_s": (sum(self._medians(records).values()), "s")}
-
-    def layer_metrics(self, records: list[dict]) -> dict:
-        return {f"registry.{n}_s": v for n, v in self._medians(records).items()}
-
-    def trace_probe(self, rec: dict, layers: dict) -> dict:
-        return {}
-
+    sql = {**Q.oracle_sql(), **Q.pytest_only_oracles()}
+    con = duckdb.connect()
+    try:
+        con.execute("SET TimeZone = 'UTC'")
+        con.execute("SET threads = 2")
+        for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
+            name = os.path.basename(p).removesuffix(".parquet")
+            con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
+        return {n: con.execute(f"SELECT count(*) FROM ({sql[n].strip().rstrip(';')})").fetchone()[0] for n in QUERIES}
+    finally:
+        con.close()

@@ -3,7 +3,7 @@
     python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>
 
 Runs one workload on local[4] from this process with one closed-loop
-client: set up (session, seeded inputs, one warm-up op), then ops back to
+client: set up (session, seeded inputs, warm-up), then ops back to
 back until ``--seconds`` have passed, then the output checks. The last
 stdout line is one JSON object: ``correct``, ``attempted``, ``failed`` and
 ``metrics`` — the end-to-end metrics of BENCHMARK.json with ``--trace 0``,
@@ -28,18 +28,16 @@ T_PROCESS = time.perf_counter()
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-WORKLOADS = ("rollup_cascade", "archive_serve", "ingest_maintain", "registry_sweep")
+WORKLOADS = ("rollup_cascade", "ingest_maintain", "archive_query")
 
 
 def _load_workload(name: str):
     if name == "rollup_cascade":
         from perfbench.cascade import RollupCascade as W
-    elif name == "archive_serve":
-        from perfbench.serve import ArchiveServe as W
     elif name == "ingest_maintain":
         from perfbench.ingest import IngestMaintain as W
     else:
-        from perfbench.registry import RegistrySweep as W
+        from perfbench.serve import ArchiveQuery as W
     return W
 
 
@@ -122,11 +120,17 @@ def _run(args, ctx, rss) -> int:
     cpu0 = H.cpu_times()
     deadline = time.perf_counter() + args.seconds
     i = 0
-    min_ops = 2 if args.trace else 1  # a traced run times one op each way
-    while (i < min_ops or time.perf_counter() < deadline) and getattr(wl, "remaining_ops", 1) > 0:
+    # a traced run times untraced, traced, untraced ops: the first warms,
+    # and the traced op has an untraced op after it to compare with
+    min_ops = 3 if args.trace else 1
+    while i < min_ops or time.perf_counter() < deadline:
         # traced runs alternate untraced and traced ops, so the same run
         # gives the tracing overhead
         traced = bool(args.trace) and i % 2 == 1
+        if hasattr(wl, "prepare"):
+            t_prep = time.perf_counter()
+            wl.prepare(i)  # outside the op's wall and the timed window
+            deadline += time.perf_counter() - t_prep
         ctx.tracer.begin_op(i, traced)
         cpu_op = H.tree_cpu_s()
         t_op = time.perf_counter()
@@ -180,7 +184,7 @@ def _run(args, ctx, rss) -> int:
 
     trace_report = None
     if args.trace:
-        trace_report = _trace_report(records, span_table(ctx.tracer.spans), H)
+        trace_report = _trace_report(records, span_table(ctx.tracer.spans), f"op.{args.workload}", H)
         layers.update(
             {
                 "trace.residual_ms": trace_report["residual_ms"],
@@ -224,25 +228,26 @@ def _run(args, ctx, rss) -> int:
     return 0 if correct else 1
 
 
-def _trace_report(records, table: dict, H) -> dict:
+def _trace_report(records, table: dict, root: str, H) -> dict:
     """Per-layer table from the spans of the traced ops, reconciled with
-    the op walls: the residual is traced op wall minus summed span self
-    time; the overhead is the median traced op wall minus the median
-    untraced one."""
+    the op walls. The residual is traced op wall minus the summed self time
+    of the layer spans (every span but the op's root): the time no layer
+    span covers. The overhead is the median, over traced ops, of the op's
+    wall minus that of the untraced op after it."""
     traced = [r for r in records if r["traced"]]
-    untraced = [r for r in records if not r["traced"]]
-    self_total_ms = sum(row["self_ms"] for row in table.values())
+    layer_self_ms = sum(row["self_ms"] for name, row in table.items() if name != root)
     wall_ms = sum(r["wall_s"] for r in traced) * 1e3
-    overhead = (
-        (H.median([r["wall_s"] for r in traced]) - H.median([r["wall_s"] for r in untraced])) * 1e3
-        if traced and untraced
-        else float("nan")
-    )
+    # the first op of a run is still markedly slower than the rest, so a
+    # traced op is compared with the untraced op right after it; ops still
+    # speed up a little, which biases this toward overstating the overhead
+    overhead = H.median(
+        [r["wall_s"] - records[k + 1]["wall_s"] for k, r in enumerate(records[:-1]) if r["traced"]]
+    ) * 1e3
     return {
         "traced_ops": len(traced),
         "traced_wall_ms": wall_ms,
-        "span_self_ms": self_total_ms,
-        "residual_ms": (wall_ms - self_total_ms) / max(1, len(traced)),
+        "span_self_ms": layer_self_ms,
+        "residual_ms": (wall_ms - layer_self_ms) / max(1, len(traced)),
         "overhead_ms": overhead,
         "spans": table,
     }
@@ -258,9 +263,9 @@ def _print_trace_table(rep: dict) -> None:
             f"{row['self_ms'] / n:10.1f} {row['queries'] / n:8.1f} {row['jobs'] / n:6.1f}"
         )
     print(
-        f"  summed self time {rep['span_self_ms'] / n:.1f} ms/op vs wall "
-        f"{rep['traced_wall_ms'] / n:.1f} ms/op: residual {rep['residual_ms']:.2f} ms/op; "
-        f"tracing overhead {rep['overhead_ms']:.1f} ms/op"
+        f"  layer spans' summed self time {rep['span_self_ms'] / n:.1f} ms/op vs wall "
+        f"{rep['traced_wall_ms'] / n:.1f} ms/op: residual (outside every layer span) "
+        f"{rep['residual_ms']:.1f} ms/op; tracing overhead {rep['overhead_ms']:.1f} ms/op"
     )
 
 

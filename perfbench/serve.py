@@ -1,26 +1,30 @@
-"""archive_serve: reads of a packed, day-partitioned 1m block archive.
+"""archive_query: reads of a packed 1m block archive, plus the registry's
+dedup, merge, text and vec queries.
 
 Set-up packs the seeded input's 1m tier into a ``day``-partitioned parquet
-block table and opens it once, as a serving process would. One op is a
-round of three requests with seeded parameters:
+block table and opens it once, as a serving process would, and writes the
+registry's seeded stand-in tables (``regdata.py``). One op is one round
+with seeded request parameters:
 
 - narrow: ``serve_range`` over one conversation, one hour inside its life;
 - asof: ``serve_asof`` with 100 seeded (conversation, instant) probes;
-- wide: ``serve_range`` over every conversation, a multi-day window.
+- the four registry queries of ``registry.py``, each with ``.count()``.
 """
 
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from perfbench import kernels, registry
 from perfbench.cascade import write_input
-from perfbench.harness import median
-from perfbench.kernels import kernel_rates
+from perfbench.harness import log, median
+from perfbench.regdata import write_tables
 from tmframe_spark.codec.udfs import pack_rollup_blocks, unpack_blocks
 from tmframe_spark.ops.asof import asof_join
 from tmframe_spark.ops.rollup import rollup
@@ -28,12 +32,12 @@ from tmframe_spark.ops.serve import blocks_for_asof, blocks_overlapping, serve_a
 
 KEYS = ["conv_id", "grp"]
 MIN_NS = 60_000_000_000
-KINDS = ("narrow", "asof", "wide")
+KINDS = ("narrow", "asof")
 PROBE_SCHEMA = StructType([StructField("conv_id", StringType()), StructField("ts_ns", LongType())])
 
 
-class ArchiveServe:
-    name = "archive_serve"
+class ArchiveQuery:
+    name = "archive_query"
 
     def __init__(self, ctx):
         self.ctx = ctx
@@ -42,17 +46,26 @@ class ArchiveServe:
             "n_convs": 500,
             "hot_conv_pct": 10,
             "narrow_minutes": 60,
-            "wide_days": 2,
             "asof_probes": 100,
+            "registry": {"n_events": 100_000, "n_users": 1_500, "n_docs": 5_000, "n_vecs": 2_000},
         }
         self.input = ctx.path("input")
         self.archive = ctx.path("archive")
+        self.sf_dir = ctx.path("tables")
         self.rng = np.random.default_rng(ctx.seed)
 
     def setup(self) -> dict:
         p = self.params
         spark = self.ctx.spark
+        t0 = time.perf_counter()
+        write_tables(self.sf_dir, self.ctx.seed, **p["registry"])
+        # the registry queries' warm-up runs on a second thread from here on:
+        # its cold start (planning, codegen, class loading) overlaps the
+        # input generation and the pack; warmup() joins it
+        self._pool = ThreadPoolExecutor(1)
+        self._warm_queries = self._pool.submit(registry.run_queries, self.ctx.tracer, spark, self.sf_dir)
         gen_s = write_input(self.ctx, p["n_turns"], p["n_convs"], p["hot_conv_pct"], self.input)
+        log(f"[perfbench] registry tables, then input {time.perf_counter() - t0:.2f}s")
         t0 = time.perf_counter()
         blocks = pack_rollup_blocks(rollup(spark.read.parquet(self.input), "1m"), "1m", "day")
         blocks.withColumn("day", F.to_date("grp")).repartition("day").write.partitionBy(
@@ -61,13 +74,14 @@ class ArchiveServe:
         pack_s = time.perf_counter() - t0
         self.blocks = spark.read.parquet(self.archive)
         life = self.blocks.groupBy("conv_id").agg(
-            F.min("ts_first").alias("lo"), F.max("ts_last").alias("hi")
+            F.min("ts_first").alias("lo"), F.max("ts_last").alias("hi"),
+            F.sum("n_points").alias("pts"), F.sum(F.length("frame")).alias("nbytes"),
         ).collect()
         self.life = {r["conv_id"]: (int(r["lo"]), int(r["hi"])) for r in life}
         self.convs = sorted(self.life)
         self.span = (min(v[0] for v in self.life.values()), max(v[1] for v in self.life.values()))
-        st = self.blocks.agg(F.sum("n_points"), F.sum(F.length("frame"))).collect()[0]
-        self.bytes_per_point = st[1] / st[0]
+        self.archive_bytes = sum(int(r["nbytes"]) for r in life)
+        self.bytes_per_point = self.archive_bytes / sum(int(r["pts"]) for r in life)
         return {"data.gen_s": gen_s + pack_s}
 
     # -- seeded request parameters -------------------------------------
@@ -80,13 +94,6 @@ class ArchiveServe:
         start = lo + int(self.rng.integers(0, (hi - lo) // MIN_NS - n_min + 2)) * MIN_NS
         return {"kind": "narrow", "conv": c, "lo": start, "hi": start + (n_min - 1) * MIN_NS}
 
-    def _wide(self) -> dict:
-        n_min = self.params["wide_days"] * 1440
-        lo, hi = self.span
-        lo -= lo % MIN_NS
-        start = lo + int(self.rng.integers(0, max(1, (hi - lo) // MIN_NS - n_min))) * MIN_NS
-        return {"kind": "wide", "conv": None, "lo": start, "hi": start + (n_min - 1) * MIN_NS}
-
     def _asof(self) -> dict:
         n = self.params["asof_probes"]
         lo, hi = self.span
@@ -98,29 +105,24 @@ class ArchiveServe:
 
     def _range(self, req: dict) -> dict:
         tr = self.ctx.tracer
-        blocks = self.blocks
-        if req["conv"] is not None:
-            blocks = blocks.where(F.col("conv_id") == req["conv"])
+        blocks = self.blocks.where(F.col("conv_id") == req["conv"])
         with tr.span("ops.serve.serve_range"):
             pts = serve_range(blocks, KEYS, req["lo"], req["hi"])
         with tr.span(f"action.serve_{req['kind']}"):
             r = pts.agg(F.count(F.lit(1)).alias("n"), F.sum("v1").alias("t")).collect()[0]
         return {"rows": int(r["n"]), "turns": int(r["t"] or 0)}
 
+    def _probes(self, req: dict):
+        return self.ctx.spark.createDataFrame(pd.DataFrame(req["probes"], columns=["conv_id", "ts_ns"]), PROBE_SCHEMA)
+
     def _serve_asof(self, req: dict) -> dict:
         tr = self.ctx.tracer
-        probes = self.ctx.spark.createDataFrame(
-            pd.DataFrame(req["probes"], columns=["conv_id", "ts_ns"]), PROBE_SCHEMA
-        )
+        probes = self._probes(req)
         with tr.span("ops.serve.serve_asof"):
             out = serve_asof(self.blocks, KEYS, ["conv_id"], probes)
         with tr.span("action.serve_asof"):
             rows = out.select("conv_id", "ts_ns", "m_ts_ns", "m_v0", "m_v1", "status").collect()
         return {"rows": len(rows), "_answer": sorted(tuple(r) for r in rows)}
-
-    def warmup(self) -> None:
-        for req in (self._narrow(), self._asof(), self._wide()):
-            self._request(req)
 
     def _request(self, req: dict) -> dict:
         t0 = time.perf_counter()
@@ -128,9 +130,21 @@ class ArchiveServe:
         out["latency_s"] = time.perf_counter() - t0
         return {**req, **out}
 
+    def warmup(self) -> None:
+        t0 = time.perf_counter()
+        served = [self._request(r) for r in (self._narrow(), self._asof())]
+        lat, counts = self._warm_queries.result()
+        self._pool.shutdown()
+        self.warm = {"requests": served, "query_s": lat, "counts": counts}
+        log(f"[perfbench] warm-up round {time.perf_counter() - t0:.2f}s: "
+            + " ".join(f"{q['kind']} {q['latency_s']:.2f}" for q in served)
+            + " " + " ".join(f"{n} {v:.2f}" for n, v in lat.items()))
+
     def op(self, i: int) -> dict:
-        reqs = [self._narrow(), self._asof(), self._wide()]
-        return {"requests": [self._request(r) for r in reqs]}
+        reqs = [self._narrow(), self._asof()]
+        served = [self._request(r) for r in reqs]
+        lat, counts = registry.run_queries(self.ctx.tracer, self.ctx.spark, self.sf_dir)
+        return {"requests": served, "query_s": lat, "counts": counts}
 
     # -- checks --------------------------------------------------------
 
@@ -138,36 +152,10 @@ class ArchiveServe:
         spark = self.ctx.spark
         bad, msgs = set(), []
         ranges = [(r["op"], q) for r in records for q in r["requests"] if q["kind"] != "asof"]
-        # expected (rows, turns) from the raw transcripts: the served 1m
-        # spine holds every minute of each conversation's life
-        raw = spark.read.parquet(self.input).select(
-            "conv_id", F.expr("unix_micros(date_trunc('minute', cast(ts as timestamp))) * 1000").alias("b")
-        )
-        life = {
-            r["conv_id"]: (int(r["lo"]), int(r["hi"]))
-            for r in raw.groupBy("conv_id").agg(F.min("b").alias("lo"), F.max("b").alias("hi")).collect()
-        }
-        win = spark.createDataFrame(
-            [(k, q["conv"], q["lo"], q["hi"]) for k, (_, q) in enumerate(ranges)],
-            "req long, wconv string, lo long, hi long",
-        )
-        turns = {
-            r["req"]: int(r["n"])
-            for r in raw.join(
-                F.broadcast(win),
-                (F.col("wconv").isNull() | (F.col("wconv") == F.col("conv_id")))
-                & F.col("b").between(F.col("lo"), F.col("hi")),
-            )
-            .groupBy("req")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        self.rows, life, turns = self._raw_oracle([q for _, q in ranges])
         for k, (op, q) in enumerate(ranges):
-            convs = [q["conv"]] if q["conv"] is not None else list(life)
-            rows = sum(
-                max(0, (min(q["hi"], life[c][1]) - max(q["lo"], life[c][0])) // MIN_NS + 1) for c in convs
-            )
-            want = (rows, turns.get(k, 0))
+            lo, hi = life[q["conv"]]
+            want = (max(0, (min(q["hi"], hi) - max(q["lo"], lo)) // MIN_NS + 1), turns.get(k, 0))
             if (q["rows"], q["turns"]) != want:
                 bad.add(op)
                 msgs.append(f"op {op} {q['kind']}: (rows, turns) {(q['rows'], q['turns'])} != raw {want}")
@@ -176,7 +164,7 @@ class ArchiveServe:
         asofs = [(r["op"], q) for r in records for q in r["requests"] if q["kind"] == "asof"]
         if asofs:
             probes = spark.createDataFrame(
-                [(k, c, t) for k, (_, q) in enumerate(asofs) for c, t in q["probes"]],
+                [(k, c, ts) for k, (_, q) in enumerate(asofs) for c, ts in q["probes"]],
                 "req long, conv_id string, ts_ns long",
             )
             convs = sorted({c for _, q in asofs for c, _ in q["probes"]})
@@ -197,44 +185,84 @@ class ArchiveServe:
                 if q["_answer"] != sorted(want.get(k, [])):
                     bad.add(op)
                     msgs.append(f"op {op} asof: {q['rows']} rows differ from asof_join over unpack_blocks")
+        # every registry query's row count, in the warm-up and in every op,
+        # equals its DuckDB oracle's over the same tables
+        oracle = registry.oracle_counts(self.sf_dir)
+        for r in [dict(self.warm, op=-1)] + records:
+            for n, c in r["counts"].items():
+                if c != oracle[n] or c == 0:
+                    bad.add(r["op"])
+                    msgs.append(f"op {r['op']} {n}: {c} rows, oracle {oracle[n]}")
+        bad.discard(-1)
         return bad, msgs
+
+    def _raw_oracle(self, ranges: list[dict]) -> tuple[int, dict, dict]:
+        """DuckDB straight over the input parquet: the input row count, each
+        conversation's life in 1m buckets, and the turns inside each range
+        request's window (by its index)."""
+        import duckdb
+
+        con = duckdb.connect()
+        try:
+            con.execute("SET threads = 2")
+            con.execute(
+                "CREATE VIEW raw AS SELECT conv_id, epoch_us(date_trunc('minute', ts)) * 1000 AS b "
+                f"FROM read_parquet('{self.input}/*.parquet')"
+            )
+            rows = con.execute("SELECT count(*) FROM raw").fetchone()[0]
+            life = {c: (lo, hi) for c, lo, hi in con.execute("SELECT conv_id, min(b), max(b) FROM raw GROUP BY conv_id").fetchall()}
+            turns = {}
+            if ranges:
+                con.register("win", pd.DataFrame(
+                    [(k, q["conv"], q["lo"], q["hi"]) for k, q in enumerate(ranges)], columns=["req", "wconv", "lo", "hi"]
+                ))
+                turns = dict(con.execute(
+                    "SELECT req, count(*) FROM raw JOIN win ON wconv = conv_id "
+                    "AND b BETWEEN lo AND hi GROUP BY req"
+                ).fetchall())
+            return rows, life, turns
+        finally:
+            con.close()
 
     # -- metrics -------------------------------------------------------
 
     def _lat(self, records, kind):
         return [q["latency_s"] for r in records if not r["traced"] for q in r["requests"] if q["kind"] == kind]
 
+    def _query_medians(self, records) -> dict:
+        rs = [r for r in records if not r["traced"]] or records
+        return {n: median([r["query_s"][n] for r in rs]) for n in registry.QUERIES}
+
     def metrics(self, records: list[dict]) -> dict:
         out = {f"serve_{k}_p50_ms": (median(self._lat(records, k)) * 1e3, "ms") for k in KINDS}
-        out["serve_requests"] = (float(sum(len(self._lat(records, k)) for k in KINDS)), "count")
+        out["registry_queries_s"] = (sum(self._query_medians(records).values()), "s")
+        out["archive_bytes_per_turn"] = (self.archive_bytes / self.rows, "bytes")
         return out
 
     def layer_metrics(self, records: list[dict]) -> dict:
-        return {"codec.bytes_per_point": self.bytes_per_point}
+        return {
+            "codec.bytes_per_point": self.bytes_per_point,
+            **{f"registry.{n}_s": v for n, v in self._query_medians(records).items()},
+        }
 
     def trace_probe(self, rec: dict, layers: dict) -> dict:
         """Blocks each request decodes (zone-map survivors), counted after
-        the op; construction time and queries per request from the spans."""
+        the op; construction time and jobs per request from the spans."""
         spans = self.ctx.tracer.last_op_spans
-        n_req = len(rec.get("requests", ())) or 1
+        reqs = rec.get("requests", ())
         decoded = 0
-        for q in rec.get("requests", ()):
+        for q in reqs:
             if q["kind"] == "asof":
-                probes = self.ctx.spark.createDataFrame(
-                    pd.DataFrame(q["probes"], columns=["conv_id", "ts_ns"]), PROBE_SCHEMA
-                )
-                decoded += blocks_for_asof(self.blocks, ["conv_id"], probes, "ts_ns").count()
+                decoded += blocks_for_asof(self.blocks, ["conv_id"], self._probes(q), "ts_ns").count()
             else:
-                b = self.blocks if q["conv"] is None else self.blocks.where(F.col("conv_id") == q["conv"])
+                b = self.blocks.where(F.col("conv_id") == q["conv"])
                 decoded += blocks_overlapping(b, q["lo"], q["hi"]).count()
-        returned = sum(q["rows"] for q in rec.get("requests", ()))
+        returned = sum(q["rows"] for q in reqs)
+        n_req = len(reqs) or 1
         construct = sum(spans.get(n, {}).get("self_ms", 0.0) for n in ("ops.serve.serve_range", "ops.serve.serve_asof"))
         jobs = sum(v["jobs"] for n, v in spans.items() if n.startswith("action.serve_"))
-        if not hasattr(self, "_kernels"):
-            enc, dec = kernel_rates()
-            self._kernels = {"codec.blocks.encode_pts_per_s": enc, "codec.blocks.decode_pts_per_s": dec}
         return {
-            **self._kernels,
+            **kernels.rates(self.ctx, self.ctx.spark.read.parquet(self.input)),
             "ops.serve.construct_ms": construct / n_req,
             "ops.serve.jobs_per_request": jobs / n_req,
             "ops.serve.blocks_decoded": decoded / n_req,
