@@ -165,6 +165,10 @@ class Context:
         self.work = os.path.join(root, ".perfbench", "work", f"{workload}-{os.getpid()}")
         shutil.rmtree(self.work, ignore_errors=True)
         os.makedirs(os.path.join(self.work, "tmp"))
+        # a Unix socket path holds at most 107 bytes, which a deep checkout
+        # overruns; the sockets go in a directory given relative to the
+        # checkout, which every process of the run has as its cwd
+        os.chdir(root)
         # everything Spark and its Python workers write stays in the checkout
         os.environ["TMPDIR"] = os.path.join(self.work, "tmp")
         os.environ["SPARK_LOCAL_DIRS"] = os.path.join(self.work, "local")
@@ -188,6 +192,7 @@ class Context:
             extra_conf={
                 "spark.driver.memory": DRIVER_MEM,
                 "spark.local.dir": os.path.join(self.work, "local"),
+                "spark.python.unix.domain.socket.dir": os.path.relpath(tmp, self.root),
                 "spark.sql.warehouse.dir": os.path.join(self.work, "warehouse"),
                 # no hsperfdata file in the system /tmp
                 "spark.driver.extraJavaOptions": (
