@@ -2,6 +2,7 @@
 blocks to the compositional gap_fill() -> pack_blocks() path, for every tier
 and group unit used by the flagship."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -120,12 +121,7 @@ def _rows_dict(df):
     }
 
 
-def test_split_dense_pack_bytes_identical_with_empty_period(spark):
-    """Round-4 verdict #3: the (conv, calendar-chunk) split pack must be
-    byte-identical to the one-task-per-conv pack — including the
-    span-trimmed first/last blocks and the all-zero block of an EMPTY
-    calendar period inside the dense conv's span — while actually re-keying
-    the dense conversation's rows by calendar chunk (parallel pack)."""
+def _empty_interior_day_rows():
     import pandas as pd
 
     rows = []
@@ -143,39 +139,51 @@ def test_split_dense_pack_bytes_identical_with_empty_period(spark):
     for m in range(5):
         ts = pd.Timestamp("2024-01-02") + pd.Timedelta(minutes=7 * m)
         rows.append(("cold", ts.to_pydatetime(), 1, m))
-    rolled = spark.createDataFrame(
-        rows, "conv_id string, bucket timestamp, turns long, token_volume long"
-    )
-    single = _rows_dict(pack_rollup_blocks(rolled, "1m", "day"))
-    split_df = pack_rollup_blocks(rolled, "1m", "day", split_dense_rows=1000)
-    plan = split_df._jdf.queryExecution().executedPlan().toString()
-    # the dense branch really re-keys by (conv, calendar chunk)
-    assert "_chunk" in plan, plan
-    split = _rows_dict(split_df)
-    assert set(split) == set(single)
-    assert split == single
-    # the empty Jan 3 interior day exists in both as a full-spine block
-    jan3 = [k for k in single if k[0] == "hot" and str(k[1]).startswith("2024-01-03")]
-    assert len(jan3) == 1 and single[jan3[0]][0] == 1440
+    return rows
 
 
-def test_split_dense_pack_matches_at_month_unit(spark):
-    # calendar-unit generality: hourly tier grouped by month, with an empty
-    # interior month; threshold routes the single conv through the split
+def _empty_interior_month_rows():
     import pandas as pd
 
+    # hourly tier grouped by month: Feb, an empty March, April
     hours = list(pd.date_range("2024-02-01", "2024-02-28 23:00", freq="h")) + list(
         pd.date_range("2024-04-01", "2024-04-30 23:00", freq="h")
     )
-    rows = [("hot", ts.to_pydatetime(), 1, i) for i, ts in enumerate(hours)]
+    return [("hot", ts.to_pydatetime(), 1, i) for i, ts in enumerate(hours)]
+
+
+@pytest.mark.parametrize(
+    "make_rows, tier, unit",
+    [
+        (_empty_interior_day_rows, "1m", "day"),
+        (_empty_interior_month_rows, "1h", "month"),
+    ],
+    ids=["1m-day", "1h-month"],
+)
+def test_dense_pack_with_empty_period_matches_compositional(
+    spark, make_rows, tier, unit
+):
+    """A dense conversation with an EMPTY interior calendar period packs
+    exactly like gap_fill -> pack_blocks: the span-trimmed first/last
+    blocks and the full-spine all-zero block of the empty period, on every
+    row field."""
     rolled = spark.createDataFrame(
-        rows, "conv_id string, bucket timestamp, turns long, token_volume long"
+        make_rows(), "conv_id string, bucket timestamp, turns long, token_volume long"
+    ).select(
+        "*",
+        *[
+            F.lit(0).cast("long").alias(c)
+            for c in ("tool_calls", "user_turns", "assistant_turns")
+        ],
     )
-    single = _rows_dict(pack_rollup_blocks(rolled, "1h", "month"))
-    split = _rows_dict(
-        pack_rollup_blocks(rolled, "1h", "month", split_dense_rows=500)
-    )
-    assert split == single and len(single) == 3  # Feb, Mar (empty), Apr
+    fused = _rows_dict(pack_rollup_blocks(rolled, tier, unit))
+    comp = _rows_dict(compositional(rolled, tier, unit))
+    assert fused == comp
+    if unit == "day":
+        jan3 = [k for k in fused if k[0] == "hot" and str(k[1]).startswith("2024-01-03")]
+        assert len(jan3) == 1 and fused[jan3[0]][0] == 1440
+    else:
+        assert len(fused) == 3  # Feb, Mar (empty), Apr
 
 
 def test_fused_equals_compositional_custom_5m_tier(spark):

@@ -84,3 +84,48 @@ def test_rolling_median_property(spark, series, half):
             for i in range(half, len(vals) - half)
         }
         assert got.get(f"c{j}", {}) == expected
+
+
+def _ewma_layouts(spark, vals):
+    # the same series as ONE dominant group (scalar route) and as 64 small
+    # groups in one batch (transposed vector route)
+    def df(n_convs):
+        rows = [
+            (f"c{j}", T0 + datetime.timedelta(hours=i), v)
+            for j in range(n_convs)
+            for i, v in enumerate(vals)
+        ]
+        return spark.createDataFrame(
+            rows, "conv_id string, bucket timestamp, token_volume long"
+        )
+
+    return {"dominant": df(1), "many": df(64)}
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    k=st.integers(min_value=1, max_value=30),
+    signs=st.lists(st.sampled_from([1, -1, 0]), min_size=2, max_size=8),
+)
+def test_ewma_int64_bound_property(spark, k, signs):
+    import pytest
+
+    edge = 1 << (63 - k)
+    vals = [s * (edge - 1) for s in signs]
+    want, s = [], None
+    for v in vals:
+        vq = v << k
+        s = vq if s is None else s + ((vq - s) >> k)
+        want.append(s)
+    for name, df in _ewma_layouts(spark, vals).items():
+        got = {}
+        for r in ewma(df, "token_volume", k=k).collect():
+            got.setdefault(r["conv_id"], {})[r["bucket"]] = r["ewma_q"]
+        hours = [T0 + datetime.timedelta(hours=i) for i in range(len(vals))]
+        for series in got.values():
+            assert [series[h] for h in hours] == want, name
+    # one value AT the bound: both layouts refuse instead of wrapping
+    out = [vals[0], -edge if signs[-1] < 0 else edge] + vals[1:]
+    for df in _ewma_layouts(spark, out).values():
+        with pytest.raises(Exception, match=rf"< 2\^{63 - k} for k={k}"):
+            ewma(df, "token_volume", k=k).collect()

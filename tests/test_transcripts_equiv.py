@@ -30,3 +30,30 @@ def test_load_transcripts_matches_portable_sql(spark):
     # schema (names + types) must match too — oracles hash by column name
     sql_schema = spark.sql(TRANSCRIPTS_FROM_EVENTS_SQL.format(events="events")).schema
     assert load_transcripts(spark, SF_DIR).schema == sql_schema
+
+
+def test_register_tables_sees_in_place_rewrite(spark, tmp_path):
+    # the registration memo must not serve a stale listing after a table
+    # is rewritten in place mid-session
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_DIR as TEST_SF_DIR
+
+    for name in os.listdir(TEST_SF_DIR):
+        shutil.copyfile(os.path.join(TEST_SF_DIR, name), tmp_path / name)
+    try:
+        register_tables(spark, str(tmp_path))
+        n = spark.table("events").count()
+        assert n > 10
+        events = tmp_path / "events.parquet"
+        pq.write_table(pq.read_table(events).slice(0, 10), events)
+        register_tables(spark, str(tmp_path))
+        assert spark.table("events").count() == 10
+        # unchanged tables keep the memo: a second call is a no-op
+        key = spark._tmframe_registered_sf
+        register_tables(spark, str(tmp_path))
+        assert spark._tmframe_registered_sf is key
+    finally:
+        register_tables(spark, TEST_SF_DIR)

@@ -33,7 +33,6 @@ from pyspark.sql.types import (
 from tmframe_spark.codec.blocks import (
     decode_block,
     encode_block,
-    encode_block_gapfilled,
     encode_blocks_gapfilled_batch,
 )
 from tmframe_spark.codec.frames import (
@@ -196,47 +195,40 @@ def pack_rollup_blocks(
     """Fused gap-fill + block-pack: the flagship's scale path.
 
     Takes the *data-sized* rollup (one row per non-empty (conv, bucket)) and
-    synthesizes each conversation's zero-filled bucket spine INSIDE the UDF
-    (numpy arange + scatter), then encodes one block per (conv, group_unit)
-    — including all-zero blocks for empty days within the conv's lifespan.
+    encodes one block per (conv, group_unit) of each conversation's
+    zero-filled bucket spine — including all-zero blocks for empty days
+    within the conv's lifespan — without ever building that spine: block
+    boundaries are calendar arithmetic and the encoder scatters only the
+    data slots.
 
     Produces byte-identical blocks to gap_fill() -> pack_blocks() (asserted
     in tests), but the shuffle carries only data rows: at a sparse
     10^12-turn table the spine is easily 100x the data, so this is the
-    difference between shuffling 100 TB and shuffling 1 TB. The spine only
-    ever exists as a numpy array inside one executor task, bounded by the
-    conv's retention window.
+    difference between shuffling 100 TB and shuffling 1 TB.
 
-    Skew note: by default one conversation packs in one task (blocks need
-    the conv's global [first, last] span), so the hot conversation is the
-    stage's potential straggler — but its cost is CALENDAR-bounded, not
+    One route: one conv-keyed exchange, one mapInPandas, and one
+    encode_blocks_gapfilled_batch call per Arrow batch for every closed
+    conversation (and one more for the partition's last conversation).
+
+    Skew note: one conversation packs in one task (blocks need the conv's
+    global [first, last] span), so the hot conversation is the stage's
+    potential straggler — but its cost is CALENDAR-bounded, not
     data-bounded: a fully dense conv-year at 1m is 525k spine points,
-    ~0.35 s at the measured dense-encode rate, so even a decade-long
-    always-active conversation costs ~3.5 s serial (coarser tiers
-    proportionally less).
+    ~0.5 s in the batch encoder, so even a decade-long always-active
+    conversation costs ~5 s serial (coarser tiers proportionally less).
+    At that density the batch encoder is ~1.2x slower than encoding block
+    by block (its per-record Gorilla window scan is Python). The
+    soak/scaling default input has such a conversation: conv-0 of
+    synth_transcripts(20M turns, 2000 convs), 579 day blocks at ~1,300
+    rows each (BENCH.md, 2026-10-17).
 
-    ``split_dense_rows`` enables the finer (conv, calendar-chunk) pack for
-    deployments where that straggler matters: conversations holding MORE
-    than this many rollup rows are re-keyed by (conv, block calendar
-    group), so the hot conversation's blocks pack in parallel — one task
-    per calendar group — while every other conversation keeps the one-pass
-    path. The byte output is UNCHANGED (asserted in tests) because block
-    boundaries are already calendar-aligned; a block only needs the conv's
-    global span, which a skew-safe pre-aggregation (map-side-combined
-    min/max/count per conv) supplies via a broadcast join — dense convs
-    are by definition few (straggler conversations), so the span table
-    broadcast is small. Empty calendar periods inside a dense conv's span
-    still produce their all-zero blocks via a per-conv chunk spine
-    anti-joined against the chunks that hold data. Cost: one extra
-    aggregation pass over the rollup + a second (dense-rows-only) shuffle
-    — pay it when the straggler dominates, not by default.
+    ``split_dense_rows`` is accepted and ignored: the frozen bench harness
+    still passes it, and the block bytes never depended on it.
     """
     # the wire contract is UTC end to end: bucket_ts_ns casts through the
-    # SESSION timezone while the block/group arithmetic (numpy datetime64,
-    # and the split path's chunk date_trunc) is UTC — a non-UTC session
-    # would silently skew epochs against calendar boundaries (and in the
-    # split path scatter block-local indices out of range), so fail loudly
-    # instead (round-5 review finding #2)
+    # SESSION timezone while the block/group arithmetic (numpy datetime64)
+    # is UTC — a non-UTC session would silently skew epochs against
+    # calendar boundaries, so fail loudly instead
     tz = rolled.sparkSession.conf.get("spark.sql.session.timeZone")
     if tz not in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00"):
         raise ValueError(
@@ -265,144 +257,43 @@ def pack_rollup_blocks(
 
     DAY_NS = 86_400_000_000_000
 
-    def pack_conv(conv, ts, a0, a1):
-        # O(data) pack: block boundaries arithmetically, spine never built.
-        t0, t_last = int(ts[0]), int(ts[-1])
-        n_total = (t_last - t0) // step + 1
+    def grp_of(t: np.ndarray) -> np.ndarray:
+        # calendar group index (days/months/years since the epoch) of ns epochs
         if unit == "D":
-            d0, dl = t0 // DAY_NS, t_last // DAY_NS
-            grp_starts = np.arange(d0, dl + 1, dtype=np.int64) * DAY_NS
-        else:  # month/year starts via datetime64 on a tiny array
-            lo, hi = np.array([t0, t_last], dtype="datetime64[ns]").astype(
-                f"datetime64[{unit}]"
-            )
-            grp_starts = (
-                np.arange(lo, hi + 1).astype("datetime64[ns]").astype(np.int64)
-            )
-        # first spine index of each group (group starts are step-aligned and
-        # t0 is bucket-aligned, so the division is exact)
-        starts = np.maximum((grp_starts - t0) // step, 0)
-        ends = np.append(starts[1:], n_total)
-        data_pos = (ts - t0) // step
-        nb = len(starts)
-        block_t0s_arr = t0 + starts * step
-        block_t0s = block_t0s_arr.tolist()
-        if len(ts) <= 400 * nb:
-            # whole-conv batch encode: per-point block id + block-local
-            # slot, then ONE vectorized pass over all of the conv's blocks
-            # (byte-equal to the per-block encoder — the 4x soak-scale win
-            # is amortizing the per-block numpy ceremony across the conv)
-            bids = np.searchsorted(starts, data_pos, side="right") - 1
-            local = data_pos - starts[bids]
-            blocks = encode_blocks_gapfilled_batch(
-                block_t0s_arr, step, ends - starts, bids, local, a0, a1
-            )
-        else:
-            # dense conv (>~400 data rows per block, e.g. the hot salted
-            # conversation at fine tiers): per-block whole-array encode
-            # beats the keyed-segmented pass (measured crossover ~400)
-            bounds = np.append(np.searchsorted(data_pos, starts), len(ts))
-            blocks = [
-                encode_block_gapfilled(
-                    block_t0s[bi],
-                    step,
-                    int(ends[bi] - starts[bi]),
-                    data_pos[bounds[bi] : bounds[bi + 1]] - int(starts[bi]),
-                    a0[bounds[bi] : bounds[bi + 1]],
-                    a1[bounds[bi] : bounds[bi + 1]],
-                )
-                for bi in range(nb)
-            ]
-        # marshal the conv's blocks as ONE frame batch (per-frame numpy
-        # ceremony amortized), then slice the stream back into rows
-        fr = make_frames(block_t0s, [EV_BLOCK] * nb, data=blocks)
-        wire = marshal_frames(fr)
-        sizes = frame_num_bytes(fr.prim, fr.ude)
-        offs = np.zeros(nb, dtype=np.int64)
-        np.cumsum(sizes[:-1], out=offs[1:])
-        grp_us = (grp_starts // 1000).astype("datetime64[us]")
-        ends_i = ends.astype(np.int64)
-        starts_i = starts.astype(np.int64)
-        return [
-            (
-                conv,
-                grp_us[bi],
-                int(ends_i[bi] - starts_i[bi]),
-                block_t0s[bi],
-                t0 + (int(ends_i[bi]) - 1) * step,
-                24 * int(ends_i[bi] - starts_i[bi]),
-                wire[int(offs[bi]) : int(offs[bi] + sizes[bi])],
-            )
-            for bi in range(nb)
-        ]
+            return t // DAY_NS
+        return t.astype("datetime64[ns]").astype(f"datetime64[{unit}]").astype(np.int64)
 
-    cols = ["conv_id", "grp", "n_points", "ts_first", "ts_last", "raw_nbytes", "frame"]
+    def grp_start_ns(g: np.ndarray) -> np.ndarray:
+        if unit == "D":
+            return g * DAY_NS
+        return g.astype(f"datetime64[{unit}]").astype("datetime64[ns]").astype(np.int64)
 
     def pack_many(conv, ts, a0, a1, cstarts, cends) -> pd.DataFrame:
-        """ALL closed conversations of one Arrow batch in ONE vectorized
-        encode (r7). encode_blocks_gapfilled_batch is per-block independent
-        (its only sequential piece, the Gorilla window scan, resets at
-        every block boundary), so nothing ties one call to one
-        conversation — and at rehearsal scale the per-conv numpy ceremony
-        WAS the pack stage (measured: 1,500 convs x ~1.8 ms/conv = 2.4 s
-        serial, ~7 _scatter_bits calls per conv instead of per batch).
-        Block ids are assigned arithmetically (a data row's block is its
-        calendar group index minus the conv's first group — no per-conv
-        searchsorted), and the >400-rows-per-block dense route keeps the
-        per-conv whole-array encoder, exactly as before. Bytes are
-        asserted identical to gap_fill->pack_blocks by tests/test_pack_fused.
+        """Conversations of one Arrow batch in ONE vectorized encode (r7).
+        encode_blocks_gapfilled_batch is per-block independent (its only
+        sequential piece, the Gorilla window scan, resets at every block
+        boundary), so nothing ties one call to one conversation — and at
+        rehearsal scale the per-conv numpy ceremony WAS the pack stage
+        (measured: 1,500 convs x ~1.8 ms/conv = 2.4 s serial). Block ids
+        are assigned arithmetically: a data row's block is its calendar
+        group index minus the conv's first group. Bytes are asserted
+        identical to gap_fill->pack_blocks by tests/test_pack_fused.
 
-        conv: per-row conv ids (only rows < cstarts[-1] used); ts/a0/a1:
-        CLOSED rows only; cstarts/cends: row ranges of the closed convs."""
+        conv: per-row conv ids (only conv[cstarts] is read); ts/a0/a1:
+        the rows of the listed convs only; cstarts/cends: their row ranges."""
         counts = (cends - cstarts).astype(np.int64)
         firsts = ts[cstarts]
         lasts = ts[cends - 1]
-        if unit == "D":
-            g_first = firsts // DAY_NS
-            g_last = lasts // DAY_NS
-        else:
-            g_first = (
-                firsts.astype("datetime64[ns]")
-                .astype(f"datetime64[{unit}]")
-                .astype(np.int64)
-            )
-            g_last = (
-                lasts.astype("datetime64[ns]")
-                .astype(f"datetime64[{unit}]")
-                .astype(np.int64)
-            )
-        nb_c = g_last - g_first + 1
-        conv_vals = conv[cstarts]
-        extra_rows: list = []
-        dense = counts > 400 * nb_c
-        if dense.any():
-            for ci in np.flatnonzero(dense).tolist():
-                s, e = int(cstarts[ci]), int(cends[ci])
-                extra_rows.extend(pack_conv(conv[s], ts[s:e], a0[s:e], a1[s:e]))
-            keep = ~dense
-            sel = np.flatnonzero(np.repeat(keep, counts))
-            ts, a0, a1 = ts[sel], a0[sel], a1[sel]
-            conv_vals = conv_vals[keep]
-            counts, firsts, lasts = counts[keep], firsts[keep], lasts[keep]
-            g_first, nb_c = g_first[keep], nb_c[keep]
+        g_first = grp_of(firsts)
+        nb_c = grp_of(lasts) - g_first + 1
         C = len(counts)
-        if C == 0:
-            out = pd.DataFrame(extra_rows, columns=cols)
-            out["grp"] = pd.to_datetime(out["grp"])
-            return out
         B = int(nb_c.sum())
         blk_cum = np.cumsum(nb_c)
         blk_first = blk_cum - nb_c
         blk_conv = np.repeat(np.arange(C), nb_c)
-        blk_g = g_first[blk_conv] + (np.arange(B) - blk_first[blk_conv])
-        if unit == "D":
-            grp_starts = blk_g * DAY_NS
-        else:
-            grp_starts = (
-                blk_g.astype(f"datetime64[{unit}]")
-                .astype("datetime64[ns]")
-                .astype(np.int64)
-            )
+        grp_starts = grp_start_ns(g_first[blk_conv] + (np.arange(B) - blk_first[blk_conv]))
+        # first spine index of each block (group starts and the conv's
+        # first bucket are both step-aligned, so the division is exact)
         t0_b = firsts[blk_conv]
         starts_b = np.maximum((grp_starts - t0_b) // step, 0)
         n_total = (lasts - firsts) // step + 1
@@ -412,29 +303,23 @@ def pack_rollup_blocks(
         ns_b = ends_b - starts_b
         row_cid = np.repeat(np.arange(C), counts)
         data_pos = (ts - firsts[row_cid]) // step
-        if unit == "D":
-            row_g = ts // DAY_NS
-        else:
-            row_g = (
-                ts.astype("datetime64[ns]")
-                .astype(f"datetime64[{unit}]")
-                .astype(np.int64)
-            )
-        row_blk = blk_first[row_cid] + (row_g - g_first[row_cid])
+        row_blk = blk_first[row_cid] + (grp_of(ts) - g_first[row_cid])
         local = data_pos - starts_b[row_blk]
         block_t0s = t0_b + starts_b * step
         blocks = encode_blocks_gapfilled_batch(
             block_t0s, step, ns_b, row_blk, local, a0, a1
         )
+        # marshal all blocks as ONE frame batch (per-frame numpy ceremony
+        # amortized), then slice the stream back into rows
         fr = make_frames(block_t0s.tolist(), [EV_BLOCK] * B, data=blocks)
         wire = marshal_frames(fr)
         sizes = frame_num_bytes(fr.prim, fr.ude)
         offs = np.zeros(B, dtype=np.int64)
         np.cumsum(sizes[:-1], out=offs[1:])
         bs, sz = offs.tolist(), sizes.tolist()
-        out = pd.DataFrame(
+        return pd.DataFrame(
             {
-                "conv_id": np.repeat(conv_vals, nb_c),
+                "conv_id": np.repeat(conv[cstarts], nb_c),
                 "grp": pd.to_datetime((grp_starts // 1000).astype("datetime64[us]")),
                 "n_points": ns_b,
                 "ts_first": block_t0s,
@@ -443,19 +328,14 @@ def pack_rollup_blocks(
                 "frame": [wire[bs[b] : bs[b] + sz[b]] for b in range(B)],
             }
         )
-        if extra_rows:
-            extra = pd.DataFrame(extra_rows, columns=cols)
-            extra["grp"] = pd.to_datetime(extra["grp"])
-            out = pd.concat([out, extra], ignore_index=True)
-        return out
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # carry = the open (possibly batch-spanning) conversation's ROLLUP
         # rows — data-sized and bounded by calendar (a Y-year conversation
         # holds at most Y*525k 1m rows, and proportionally fewer at coarser
-        # tiers), never the gap-filled spine, which only exists as numpy
-        # arrays inside pack_conv one block at a time. Guarded by the
-        # decade-long-conversation test in tests/test_pack_fused.py.
+        # tiers), never the gap-filled spine, which the encoder never
+        # builds. Guarded by the decade-long-conversation test in
+        # tests/test_pack_fused.py.
         carry: pd.DataFrame | None = None
         for pdf in batches:
             if carry is not None:
@@ -479,17 +359,14 @@ def pack_rollup_blocks(
                 conv, ts[:ncl], a0[:ncl], a1[:ncl], starts[:-1], starts[1:]
             )
         if carry is not None and len(carry):
-            out = pd.DataFrame(
-                pack_conv(
-                    carry["conv_id"].iloc[0],
-                    carry["_ts"].to_numpy(np.int64),
-                    carry["_v0"].to_numpy(np.float64),
-                    carry["_v1"].to_numpy(np.int64),
-                ),
-                columns=cols,
+            yield pack_many(
+                carry["conv_id"].to_numpy(),
+                carry["_ts"].to_numpy(np.int64),
+                carry["_v0"].to_numpy(np.float64),
+                carry["_v1"].to_numpy(np.int64),
+                np.array([0]),
+                np.array([len(carry)]),
             )
-            out["grp"] = pd.to_datetime(out["grp"])
-            yield out
 
     # explicit partition count — see pack_blocks: the pack cost is Python
     # work per conversation, not bytes; AQE byte-based coalescing must not
@@ -498,178 +375,10 @@ def pack_rollup_blocks(
     # pure per-task Python-worker overhead.
     from tmframe_spark.ops.sizing import cpu_stage_partitions
 
-    n_part = int(rolled.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if split_dense_rows is None:
-        part = pts.repartition(
-            cpu_stage_partitions(pts), F.col("conv_id")
-        ).sortWithinPartitions("conv_id", "_ts")
-        return part.mapInPandas(fn, out_schema)
-
-    # ---- (conv, calendar-chunk) split path (round-4 verdict #3) ---------
-    unit_name = {"D": "day", "M": "month", "Y": "year"}[unit]
-
-    def chunk_trunc_ns(t: int) -> int:
-        if unit == "D":
-            return (t // DAY_NS) * DAY_NS
-        return int(
-            np.datetime64(t, "ns")
-            .astype(f"datetime64[{unit}]")
-            .astype("datetime64[ns]")
-            .astype(np.int64)
-        )
-
-    def chunk_next_ns(g: int) -> int:
-        if unit == "D":
-            return g + DAY_NS
-        nxt = np.datetime64(g, "ns").astype(f"datetime64[{unit}]") + 1
-        return int(nxt.astype("datetime64[ns]").astype(np.int64))
-
-    def pack_one_chunk(conv, g, t0, tl, ts, a0, a1):
-        # the block whose calendar group starts at g, with pack_conv's exact
-        # arithmetic given the conv's GLOBAL span [t0, tl]: the first block
-        # starts at t0 (not its calendar start) and the last ends at tl
-        start = max((g - t0) // step, 0)
-        end = (
-            (tl - t0) // step + 1
-            if g == chunk_trunc_ns(tl)
-            else (chunk_next_ns(g) - t0) // step
-        )
-        bt0 = int(t0 + start * step)
-        idx = (
-            (ts - t0) // step - start
-            if ts is not None
-            else np.empty(0, dtype=np.int64)
-        )
-        block = encode_block_gapfilled(
-            bt0,
-            step,
-            int(end - start),
-            idx,
-            a0 if a0 is not None else np.empty(0, dtype=np.float64),
-            a1 if a1 is not None else np.empty(0, dtype=np.int64),
-        )
-        fr = make_frames([bt0], [EV_BLOCK], data=[block])
-        return (
-            conv,
-            np.datetime64(g // 1000, "us"),
-            int(end - start),
-            bt0,
-            int(t0 + (end - 1) * step),
-            24 * int(end - start),
-            marshal_frames(fr),
-        )
-
-    # the split plan reads pts three times (span agg, sparse anti-join,
-    # dense join) — materialize it once (eager localCheckpoint: reuse +
-    # auto release, the repo rule) instead of recomputing the rollup
-    # lineage per branch (measured 2.2x soak regression without this)
-    pts = pts.localCheckpoint(eager=True)
-    # skew-safe per-conv span: map-side-combined min/max/count, then the
-    # (small — dense convs are by definition the few stragglers) span table
-    # broadcasts to route rows without an extra data-sized shuffle
-    spans = pts.groupBy("conv_id").agg(
-        F.min("_ts").alias("_t0"),
-        F.max("_ts").alias("_tl"),
-        F.count(F.lit(1)).alias("_cnt"),
-    )
-    dense = spans.where(F.col("_cnt") > split_dense_rows).drop("_cnt")
-    sparse_blocks = (
-        pts.join(F.broadcast(dense.select("conv_id")), "conv_id", "left_anti")
-        .repartition(n_part, F.col("conv_id"))
-        .sortWithinPartitions("conv_id", "_ts")
-        .mapInPandas(fn, out_schema)
-    )
-
-    chunk_of = F.expr(
-        f"unix_micros(date_trunc('{unit_name}', timestamp_micros(_ts div 1000))) * 1000"
-    )
-    dense_pts = pts.join(F.broadcast(dense), "conv_id").withColumn("_chunk", chunk_of)
-
-    def dense_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # same streaming-carry shape as fn, but the group key is
-        # (conv_id, _chunk) and each group emits exactly one block
-        carry: pd.DataFrame | None = None
-
-        def emit(pdf, starts, ends):
-            conv = pdf["conv_id"].to_numpy()
-            chk = pdf["_chunk"].to_numpy(np.int64)
-            t0a = pdf["_t0"].to_numpy(np.int64)
-            tla = pdf["_tl"].to_numpy(np.int64)
-            ts = pdf["_ts"].to_numpy(np.int64)
-            a0 = pdf["_v0"].to_numpy(np.float64)
-            a1 = pdf["_v1"].to_numpy(np.int64)
-            rows = [
-                pack_one_chunk(
-                    conv[s], int(chk[s]), int(t0a[s]), int(tla[s]),
-                    ts[s:e], a0[s:e], a1[s:e],
-                )
-                for s, e in zip(starts.tolist(), ends.tolist())
-            ]
-            out = pd.DataFrame(rows, columns=cols)
-            out["grp"] = pd.to_datetime(out["grp"])
-            return out
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            conv = pdf["conv_id"].to_numpy()
-            chk = pdf["_chunk"].to_numpy(np.int64)
-            change = np.empty(len(conv), dtype=bool)
-            change[0] = True
-            np.not_equal(conv[1:], conv[:-1], out=change[1:])
-            change[1:] |= chk[1:] != chk[:-1]
-            starts = np.flatnonzero(change)
-            carry = pdf.iloc[starts[-1] :].reset_index(drop=True)
-            if len(starts) == 1:
-                continue
-            ends = np.append(starts[1:], len(pdf))
-            yield emit(pdf, starts[:-1], ends[:-1])
-        if carry is not None and len(carry):
-            yield emit(carry, np.array([0]), np.array([len(carry)]))
-
-    dense_blocks = (
-        dense_pts.repartition(n_part, "conv_id", "_chunk")
-        .sortWithinPartitions("conv_id", "_chunk", "_ts")
-        .mapInPandas(dense_fn, out_schema)
-    )
-
-    # empty calendar periods inside a dense conv's span still owe their
-    # all-zero blocks: per-conv chunk spine (calendar-bounded) minus the
-    # chunks that hold data
-    spine = dense.select(
-        "conv_id",
-        "_t0",
-        "_tl",
-        F.explode(
-            F.sequence(
-                F.expr(f"date_trunc('{unit_name}', timestamp_micros(_t0 div 1000))"),
-                F.expr(f"date_trunc('{unit_name}', timestamp_micros(_tl div 1000))"),
-                F.expr(f"interval 1 {unit_name}"),
-            )
-        ).alias("_cts"),
-    ).select("conv_id", "_t0", "_tl", F.expr("unix_micros(_cts) * 1000").alias("_chunk"))
-    present = dense_pts.select("conv_id", "_chunk").distinct()
-    empties = spine.join(present, ["conv_id", "_chunk"], "left_anti")
-
-    def empty_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = [
-                pack_one_chunk(c, int(g), int(t0), int(tl), None, None, None)
-                for c, g, t0, tl in zip(
-                    pdf["conv_id"], pdf["_chunk"], pdf["_t0"], pdf["_tl"]
-                )
-            ]
-            out = pd.DataFrame(rows, columns=cols)
-            out["grp"] = pd.to_datetime(out["grp"])
-            yield out
-
-    empty_blocks = empties.mapInPandas(empty_fn, out_schema)
-    return sparse_blocks.unionByName(dense_blocks).unionByName(empty_blocks)
+    part = pts.repartition(
+        cpu_stage_partitions(pts), F.col("conv_id")
+    ).sortWithinPartitions("conv_id", "_ts")
+    return part.mapInPandas(fn, out_schema)
 
 
 def unpack_blocks(

@@ -62,18 +62,27 @@ def register_tables(spark: SparkSession, sf_dir: str) -> None:
     each ``spark.read.parquet`` costs a driver-side listing + footer
     schema read (~0.1 s/table measured), so a registry sweep that calls
     this per query would pay ~1 s of pure metadata overhead per call.
-    The memo holds only the last-registered directory (a Python attribute
-    on this session wrapper) — switching sf_dirs re-registers, and every
-    query action still reads the parquet data itself from disk."""
+    The memo holds only the last registration (a Python attribute on this
+    session wrapper), keyed on the absolute directory plus each table
+    path's ``st_mtime_ns`` — switching sf_dirs or rewriting a table in
+    place re-registers (a view keeps the file listing it was built with),
+    and every query action still reads the parquet data itself from
+    disk."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     import os
 
     sf = os.path.abspath(sf_dir)
-    if getattr(spark, "_tmframe_registered_sf", None) == sf:
+
+    def mtime(t):
+        p = os.path.join(sf, f"{t}.parquet")
+        return os.stat(p).st_mtime_ns if os.path.exists(p) else None
+
+    key = (sf, tuple(mtime(t) for t in TABLES))
+    if getattr(spark, "_tmframe_registered_sf", None) == key:
         return
     for t in TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-    spark._tmframe_registered_sf = sf
+    spark._tmframe_registered_sf = key
 
 
 def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:

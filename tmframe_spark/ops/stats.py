@@ -230,6 +230,12 @@ def ewma(
     original scalar loop runs instead — it doubles as the semantics twin.
     The recurrence itself is unchanged and exact: arithmetic >> on int64
     is the same floor shift in numpy and Python.
+
+    Range: the Q_k state is int64, so every value must satisfy
+    |v| < 2^(63-k). A batch holding a value outside that bound goes to
+    the scalar twin, which raises a ValueError naming the bound — the
+    vector shift would wrap silently instead, and the result would depend
+    on how the Arrow batch is composed.
     """
     import numpy as _np
     import pandas as _pd
@@ -238,6 +244,7 @@ def ewma(
     if k < 1 or k > 30:
         raise ValueError(f"ewma k must be in [1, 30], got {k}")
     shift = k
+    bound = 1 << (63 - shift)  # |v| < 2^(63-k) keeps v << k inside int64
 
     src = rolled.select(
         "conv_id", "bucket", F.col(value_col).cast("long").alias("value")
@@ -258,7 +265,8 @@ def ewma(
             gstarts = _np.flatnonzero(change)
             lengths = _np.diff(_np.append(gstarts, n))
             max_len = int(lengths.max())
-            if max_len <= n // 8 or len(gstarts) >= 64:
+            wraps = bool(((vals >= bound) | (vals <= -bound)).any())
+            if not wraps and (max_len <= n // 8 or len(gstarts) >= 64):
                 # transposed vector scan (groups in parallel)
                 G = len(gstarts)
                 S = _np.zeros(G, dtype=_np.int64)
@@ -268,13 +276,17 @@ def ewma(
                     if st is not None:
                         S[g], has[g] = st, True
                 out = _np.empty(n, dtype=_np.int64)
-                vq = vals.astype(_np.int64) << shift
+                vr = vals.astype(_np.int64)
+                vq = vr << shift
                 for j in range(max_len):
                     act = lengths > j
                     rows = gstarts[act] + j
                     v = vq[rows]
                     sa = S[act]
-                    stepped = sa + ((v - sa) >> shift)
+                    # ((v << k) - S) >> k == v + ((-S) >> k) exactly; the
+                    # right side cannot wrap int64 while |v| < 2^(63-k),
+                    # the left side's difference can (mixed signs)
+                    stepped = sa + (vr[rows] + ((-sa) >> shift))
                     if j == 0:
                         stepped = _np.where(has[act], stepped, v)
                     S[act] = stepped
@@ -282,12 +294,19 @@ def ewma(
                 for g, si in enumerate(gstarts.tolist()):
                     state[convs[si]] = int(S[g])
             else:
-                # scalar twin: one group dominates; also the reference
-                # semantics in plain python
+                # scalar twin: one group dominates or a value is out of
+                # range; also the reference semantics in plain python
                 out = [0] * n
                 for i in range(n):
                     c = convs[i]
-                    v = int(vals[i]) << shift
+                    v = int(vals[i])
+                    if not -bound < v < bound:
+                        raise ValueError(
+                            f"ewma value {v} of {value_col!r} is outside the "
+                            f"int64 Q_{shift} state range: |value| must be "
+                            f"< 2^{63 - shift} for k={shift}"
+                        )
+                    v <<= shift
                     s = state.get(c)
                     s = v if s is None else s + ((v - s) >> shift)
                     state[c] = s
